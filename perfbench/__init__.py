@@ -1,0 +1,5 @@
+"""Seeded, oracle-checked benchmark for the wikipedia_wikidata_spark engine.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
